@@ -16,10 +16,12 @@ continues).  Re-targeted at partitions of one huge table per SURVEY §7 M4:
   because every partition job is a pure function of its input split and
   the config, a resumed run produces byte-identical decisions.
 
-Each completed partition appends its lineage/metrics rows as new parquet
-files (append mode = atomic-enough commit per partition on real object
-stores this maps to a manifest commit; Iceberg's snapshot append is the
-production target).
+Each partition commits as one observed decisions write, then a metrics
+append and a lineage append: rows in, rows kept and per-class matched rows
+are an ``Observation`` on the write job (one UDF pass, no recount), and
+both appends are driver-built rows in new parquet files (append mode =
+atomic-enough commit per partition; on object stores a manifest commit,
+Iceberg's snapshot append being the production target).
 """
 
 from __future__ import annotations
@@ -28,20 +30,32 @@ import os
 from dataclasses import dataclass
 from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .pipeline import PipelineConfig, decide
+from .pipeline import PipelineConfig, decide, write_decisions
 from .scrub import PII_CLASSES
 
-# row schema as WRITTEN by _append_lineage (the timestamp is added at
-# append time); the public constants derive from it so they cannot drift
+# row schemas as WRITTEN by _append (the timestamp is added at append
+# time); the public constants derive from them so they cannot drift
 _LINEAGE_ROW_SCHEMA = ("partition_id string, status string, rows_in long, "
                        "rows_kept long, rows_dropped long, error string, "
                        "snapshot_id long")
 LINEAGE_SCHEMA = _LINEAGE_ROW_SCHEMA + ", effective_timestamp timestamp"
-METRICS_SCHEMA = ("partition_id string, class_name string, score double, "
-                  "effective_timestamp timestamp")
+_METRICS_ROW_SCHEMA = "partition_id string, class_name string, score double"
+METRICS_SCHEMA = _METRICS_ROW_SCHEMA + ", effective_timestamp timestamp"
+
+
+def _observed() -> List[Column]:
+    """Counts observed on a partition's decisions write: rows, kept rows
+    and rows matching each PII class (score = matched / rows)."""
+    return [F.count(F.lit(1)).alias("rows_in"),
+            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+            *[F.sum((F.coalesce(F.col("pii_counts").getItem(c), F.lit(0)) > 0)
+                    .cast("long")).alias(f"m_{i}")
+              for i, c in enumerate(PII_CLASSES)]]
 
 
 def bucket_transcripts(df: DataFrame, n_buckets: int = 16) -> DataFrame:
@@ -140,19 +154,21 @@ class ResumableRunner:
                 .filter(F.col("ok") == 1).collect())
         return {r["partition_id"] for r in rows}
 
+    def _append(self, path: str, ddl: str, rows: List[tuple]) -> None:
+        """Append stamped driver rows as one parquet file.  An Arrow table
+        starts no Python worker (a list of rows goes through a PythonRDD)."""
+        schema = T.DataType.fromDDL(ddl)
+        table = pa.table(list(zip(*rows)), names=schema.names)
+        (self.spark.createDataFrame(table, schema)
+         .withColumn("effective_timestamp", F.current_timestamp())
+         .coalesce(1).write.mode("append").parquet(path))
+
     def _append_lineage(self, partition_id: str, status: str, rows_in: int,
                         rows_kept: int, error: Optional[str],
                         snapshot_id: Optional[int] = None) -> None:
-        row = [(partition_id, status, rows_in, rows_kept,
-                rows_in - rows_kept, error,
-                None if snapshot_id is None else int(snapshot_id))]
-        (self.spark.createDataFrame(row, _LINEAGE_ROW_SCHEMA)
-         .withColumn("effective_timestamp", F.current_timestamp())
-         .coalesce(1).write.mode("append").parquet(self.lineage_path))
-
-    def _append_metrics(self, metrics_df: DataFrame) -> None:
-        (metrics_df.withColumn("effective_timestamp", F.current_timestamp())
-         .coalesce(1).write.mode("append").parquet(self.metrics_path))
+        self._append(self.lineage_path, _LINEAGE_ROW_SCHEMA, [(
+            partition_id, status, rows_in, rows_kept, rows_in - rows_kept,
+            error, None if snapshot_id is None else int(snapshot_id))])
 
     # -- execution ----------------------------------------------------------
     def run(self, input_path: str, output_path: str,
@@ -182,13 +198,17 @@ class ResumableRunner:
                     raise RuntimeError(f"injected failure for partition {part}")
                 src = self.spark.read.parquet(
                     os.path.join(input_path, f"part_id={part}"))
-                decisions = decide(src, cfg).sortWithinPartitions(
-                    "conv_id", "turn_idx").localCheckpoint(eager=True)
-                rows_in = decisions.count()
-                rows_kept = decisions.filter(F.col("keep")).count()
-                decisions.write.mode("overwrite").parquet(
-                    os.path.join(output_path, f"part_id={part}"))
-                self._append_metrics(self._partition_metrics(decisions, part))
+                # one job: UDF pass, write and counts (retried tasks count once)
+                obs = Observation()
+                write_decisions(decide(src, cfg).observe(obs, *_observed()),
+                                os.path.join(output_path, f"part_id={part}"))
+                seen = obs.get
+                rows_in, rows_kept = seen["rows_in"], seen["rows_kept"] or 0
+                matched = [seen[f"m_{i}"] for i in range(len(PII_CLASSES))]
+                self._append(self.metrics_path, _METRICS_ROW_SCHEMA, [
+                    (part, name, m / rows_in if rows_in else None)
+                    for name, m in zip((*PII_CLASSES, "keep_rate"),
+                                       (*matched, rows_kept))])
                 self._append_lineage(part, "done", rows_in, rows_kept, None,
                                      snapshot_id)
                 report.processed.append(part)
@@ -201,23 +221,3 @@ class ResumableRunner:
                 except Exception:
                     pass
         return report
-
-    @staticmethod
-    def _partition_metrics(decisions: DataFrame, partition_id: str) -> DataFrame:
-        """Per-class matched-row fraction + keep rate (scanner.py:325 score
-        semantics) — one aggregate pass."""
-        aggs = [F.avg((F.coalesce(F.col("pii_counts").getItem(c), F.lit(0)) > 0)
-                      .cast("int")).alias(f"s_{i}")
-                for i, c in enumerate(PII_CLASSES)]
-        aggs.append(F.avg(F.col("keep").cast("int")).alias("s_keep"))
-        one = decisions.agg(*aggs)
-        cells = F.array(
-            *[F.struct(F.lit(c).alias("class_name"),
-                       F.col(f"s_{i}").cast("double").alias("score"))
-              for i, c in enumerate(PII_CLASSES)],
-            F.struct(F.lit("keep_rate").alias("class_name"),
-                     F.col("s_keep").cast("double").alias("score")),
-        )
-        return (one.select(F.explode(cells).alias("cell"))
-                .select(F.lit(partition_id).alias("partition_id"),
-                        "cell.class_name", "cell.score"))

@@ -71,10 +71,14 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
-            # Spark-written dataset directory: sum the data files (the
-            # inode size of the directory itself is meaningless)
-            size = sum(e.stat().st_size for e in os.scandir(path)
-                       if e.is_file() and not e.name.startswith(("_", ".")))
+            # Spark-written dataset directory, possibly ``key=value/``
+            # partitioned: sum the data files at every depth (the inode
+            # size of a directory is meaningless)
+            size = 0
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                size += sum(os.path.getsize(os.path.join(root, f))
+                            for f in files if not f.startswith(("_", ".")))
         else:
             size = os.path.getsize(path)
     except OSError:

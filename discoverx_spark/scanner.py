@@ -46,18 +46,19 @@ def _read_parquet_if_exists(spark: SparkSession, path: str, **options):
     """Read parquet, or None ONLY when the path does not exist.  Any other
     read failure (corrupt footer, permission, transient FS error) propagates
     — treating it as "first write" would silently overwrite and discard all
-    previously persisted state (MERGE-upsert must never be lossy)."""
-    from pyspark.errors import AnalysisException
+    previously persisted state (MERGE-upsert must never be lossy).
 
-    try:
-        df = spark.read.options(**options).parquet(path)
-        df.schema  # force analysis so a missing path surfaces here
-        return df
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    Existence is asked of the Hadoop FileSystem first, so a missing path
+    issues no failing query (once an ``Observation`` has run in the
+    session, every failed query logs a listener stack trace)."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(conf).exists(hpath):
+        return None
+    df = spark.read.options(**options).parquet(path)
+    df.schema  # force analysis so a read failure surfaces here
+    return df
 
 
 SCAN_RESULT_SCHEMA = T.StructType([

@@ -449,3 +449,23 @@ def test_lm_broadcast_auto_policy(spark, monkeypatch):
     assert kn_big.count("BroadcastExchange") == 1
     assert ("SortMergeJoin" in sb_big) or ("ShuffledHashJoin" in sb_big)
     assert ("SortMergeJoin" in kn_big) or ("ShuffledHashJoin" in kn_big)
+
+
+def test_input_sizing_counts_partitioned_directories(spark, tmp_path,
+                                                     monkeypatch):
+    """``_t_par`` sizes a ``key=value/`` partitioned dataset by the data
+    files at every depth: a big-enough partitioned input is read as is,
+    not repartitioned as if it were empty."""
+    from discoverx_spark import queries
+
+    (spark.range(2000).withColumn("k", F.col("id") % 2)
+     .write.partitionBy("k").parquet(str(tmp_path / "docs.parquet")))
+
+    def exchanges():
+        df = queries._t_par(spark, str(tmp_path), "docs")
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "Exchange")
+
+    assert exchanges() == 1  # a few KB: under the 4 MB/slot floor
+    monkeypatch.setattr(queries, "_PAR_MIN_BYTES_PER_SLOT", 1)
+    assert exchanges() == 0
