@@ -145,9 +145,8 @@ def conversation_near_duplicates(turns: DataFrame, k: int = 16,
     banding + signature-agreement verification.  The signature struct is
     carried through the banding shuffle (see dedup.minhash_near_duplicates)
     so verification needs no re-join; hot buckets are capped."""
-    from .dedup import _bucket_pairs, _validate_bands
+    from .dedup import _minhash_pairs
 
-    _validate_bands(k, bands)
     # a conversation whose EVERY turn has null text yields an all-null
     # signature (min over no non-null hashes); such convs carry no
     # content evidence and must not pair with each other
@@ -156,26 +155,7 @@ def conversation_near_duplicates(turns: DataFrame, k: int = 16,
     packed = sigs.select(
         "id", F.struct(*[F.col(f"mh_{i}").alias(f"m{i}")
                          for i in range(k)]).alias("sig"))
-    rows_per_band = k // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col("sig")[f"m{b * rows_per_band + j}"]
-                 for j in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat_ws(",", *[p.cast("string") for p in parts]))
-            .alias("band_hash")))
-    exploded = (packed.select("id", "sig",
-                              F.explode(F.array(*band_cols)).alias("band"))
-                .select("id", "sig", "band.band_idx", "band.band_hash"))
-    agree = sum((F.col("sig_a")[f"m{i}"] == F.col("sig_b")[f"m{i}"]).cast("int")
-                for i in range(k))
-    est = (agree / F.lit(k)).alias("est_jaccard")
-    return _bucket_pairs(
-        exploded, key_cols=["band_idx", "band_hash"], extra_cols=["sig"],
-        max_bucket=max_bucket,
-        project=lambda df: (df.select("id_a", "id_b", est)
-                            .filter(F.col("est_jaccard") >= threshold)))
+    return _minhash_pairs(packed, k, bands, threshold, max_bucket)
 
 
 def dedup_conversations(turns: DataFrame) -> DataFrame:

@@ -27,6 +27,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+from pyspark.sql.window import Window
 
 
 # --------------------------------------------------------------------------
@@ -162,15 +164,6 @@ def minhash_struct_expr(shingles: Column, k: int = 16,
     raise ValueError(f"unknown hash_mode {hash_mode!r}")
 
 
-def minhash_signature_exprs(shingles: Column, k: int = 16,
-                            hash_mode: str = "xxhash64") -> list:
-    """Back-compat list-of-columns form.  Prefer :func:`minhash_signatures`
-    (or :func:`minhash_struct_expr` + a two-step select): selecting these k
-    columns in ONE projection re-evaluates the fold per column."""
-    s = minhash_struct_expr(shingles, k, hash_mode)
-    return [s[f"m{i}"].alias(f"mh_{i}") for i in range(k)]
-
-
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        k: int = 16, shingle_n: int = 3,
                        hash_mode: str = "xxhash64") -> DataFrame:
@@ -234,8 +227,6 @@ def _bucket_pairs(exploded: DataFrame, key_cols: Sequence[str],
     # reference — measured 3× duplicate computation in the optimized plan.
     # With the window, everything hangs off ONE exchange on the bucket key,
     # which the self-join's requirement then reuses.
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(*keys)
     tagged = exploded.select(
         *keys, "id", *extra_cols,
@@ -277,19 +268,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
     defaults ON: with the default a mega-bucket of m rows emits O(m) star
     pairs instead of m²/2.  Pass ``max_bucket=None`` explicitly only for
     small oracle-parity inputs that need the exhaustive pair set."""
-    _validate_bands(k, bands)
-    rows_per_band = k // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + j}")
-                 for j in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat_ws(",", *[p.cast("string") for p in parts])).alias("band_hash"),
-        ))
-    exploded = (signatures
-                .select("id", F.explode(F.array(*band_cols)).alias("band"))
-                .select("id", "band.band_idx", "band.band_hash"))
+    exploded = _banded(signatures, lambda i: F.col(f"mh_{i}"), k, bands)
     return _bucket_pairs(exploded, key_cols=["band_idx", "band_hash"],
                          max_bucket=max_bucket)
 
@@ -301,6 +280,55 @@ def _validate_bands(k: int, bands: int) -> None:
     if bands < 1 or k % bands != 0:
         raise ValueError(
             f"bands must divide k evenly (got k={k}, bands={bands})")
+
+
+def _banded(sigs: DataFrame, mh, k: int, bands: int,
+            carry: Sequence[str] = ()) -> DataFrame:
+    """The LSH banding every MinHash candidate generator shares:
+    ``(id, *carry, band_idx, band_hash)``, one row per (document, band).
+    ``mh(i)`` is the i-th min-hash column of ``sigs``; band ``b`` hashes
+    min-hashes ``b*k/bands .. (b+1)*k/bands - 1`` with md5, so every
+    caller buckets a given signature identically."""
+    _validate_bands(k, bands)
+    rows_per_band = k // bands
+    band_cols = [F.struct(
+        F.lit(b).alias("band_idx"),
+        F.md5(F.concat_ws(",", *[mh(b * rows_per_band + j).cast("string")
+                                 for j in range(rows_per_band)]))
+        .alias("band_hash")) for b in range(bands)]
+    return (sigs.select("id", *carry,
+                        F.explode(F.array(*band_cols)).alias("band"))
+            .select("id", *carry, "band.band_idx", "band.band_hash"))
+
+
+def _minhash_pairs(sigs: DataFrame, k: int, bands: int, threshold: float,
+                   max_bucket: Optional[int],
+                   keep_capped_star: bool = False) -> DataFrame:
+    """Banded candidates of an ``(id, sig: struct<m0..m{k-1}>)`` frame,
+    verified by signature agreement: ``(id_a, id_b, est_jaccard)`` with
+    ``est_jaccard >= threshold`` (star pairs of capped buckets pass
+    unverified under ``keep_capped_star``; see
+    :func:`minhash_near_duplicates`)."""
+    exploded = _banded(sigs, lambda i: F.col("sig")[f"m{i}"], k, bands,
+                       carry=("sig",))
+    agree = sum((F.col("sig_a")[f"m{i}"] == F.col("sig_b")[f"m{i}"]).cast("int")
+                for i in range(k))
+    est = (agree / F.lit(k)).alias("est_jaccard")
+    # the projection collapses each pair row to (ids, est) BEFORE the
+    # dedup shuffle — 3 scalars instead of two 16-long signature structs
+    if keep_capped_star:
+        pairs = _bucket_pairs(
+            exploded, key_cols=["band_idx", "band_hash"],
+            extra_cols=["sig"], max_bucket=max_bucket, mark_star=True,
+            project=lambda df: df.select("id_a", "id_b", est))
+        return (pairs.filter((F.col("est_jaccard") >= threshold)
+                             | F.col("is_star"))
+                .drop("is_star"))
+    return _bucket_pairs(
+        exploded, key_cols=["band_idx", "band_hash"],
+        extra_cols=["sig"], max_bucket=max_bucket,
+        project=lambda df: (df.select("id_a", "id_b", est)
+                            .filter(F.col("est_jaccard") >= threshold)))
 
 
 def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str,
@@ -328,7 +356,6 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str,
     column, so verification reads it straight off the pair rows — ONE
     shuffle total instead of banding + two signature re-joins (which also
     recomputed the signature fold three times; measured ~2× on sf0.1)."""
-    _validate_bands(k, bands)
     sh = shingles_expr(text_col, shingle_n)
     # null-text rows never generate candidates: shingles(null) collapses
     # to [''] and every missing document would otherwise become an exact
@@ -336,36 +363,8 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str,
     base = df.filter(F.col(text_col).isNotNull()) \
         .select(F.col(id_col).alias("id"),
                 minhash_struct_expr(sh, k, hash_mode).alias("sig"))
-    rows_per_band = k // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col("sig")[f"m{b * rows_per_band + j}"]
-                 for j in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat_ws(",", *[p.cast("string") for p in parts]))
-            .alias("band_hash")))
-    exploded = (base.select("id", "sig",
-                            F.explode(F.array(*band_cols)).alias("band"))
-                .select("id", "sig", "band.band_idx", "band.band_hash"))
-    agree = sum((F.col("sig_a")[f"m{i}"] == F.col("sig_b")[f"m{i}"]).cast("int")
-                for i in range(k))
-    est = (agree / F.lit(k)).alias("est_jaccard")
-    # the projection collapses each pair row to (ids, est) BEFORE the
-    # dedup shuffle — 3 scalars instead of two 16-long signature structs
-    if keep_capped_star:
-        pairs = _bucket_pairs(
-            exploded, key_cols=["band_idx", "band_hash"],
-            extra_cols=["sig"], max_bucket=max_bucket, mark_star=True,
-            project=lambda df: df.select("id_a", "id_b", est))
-        return (pairs.filter((F.col("est_jaccard") >= threshold)
-                             | F.col("is_star"))
-                .drop("is_star"))
-    return _bucket_pairs(
-        exploded, key_cols=["band_idx", "band_hash"],
-        extra_cols=["sig"], max_bucket=max_bucket,
-        project=lambda df: (df.select("id_a", "id_b", est)
-                            .filter(F.col("est_jaccard") >= threshold)))
+    return _minhash_pairs(base, k, bands, threshold, max_bucket,
+                          keep_capped_star)
 
 
 def contamination_check(corpus: DataFrame, benchmark: DataFrame,
@@ -428,26 +427,10 @@ def incremental_lsh_pairs(index_sigs: DataFrame, new_sigs: DataFrame,
     Inputs are signature frames from :func:`minhash_signatures` (same k /
     hash family for both).  Returns (id_a, id_b) with id_a < id_b,
     distinct; within-batch pairs appear once."""
-    _validate_bands(k, bands)
-
-    def band_frame(sigs: DataFrame) -> DataFrame:
-        rows_per_band = k // bands
-        band_cols = []
-        for b in range(bands):
-            parts = [F.col(f"mh_{b * rows_per_band + j}")
-                     for j in range(rows_per_band)]
-            band_cols.append(F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(F.concat_ws(",", *[p.cast("string") for p in parts]))
-                .alias("band_hash")))
-        return (sigs.select("id",
-                            F.explode(F.array(*band_cols)).alias("band"))
-                .select("id", "band.band_idx", "band.band_hash"))
-
-    all_bands = band_frame(index_sigs).unionByName(
-        band_frame(new_sigs))
-    probe = band_frame(new_sigs) \
-        .withColumnRenamed("id", "new_id")
+    new_bands = _banded(new_sigs, lambda i: F.col(f"mh_{i}"), k, bands)
+    all_bands = _banded(index_sigs, lambda i: F.col(f"mh_{i}"), k,
+                        bands).unionByName(new_bands)
+    probe = new_bands.withColumnRenamed("id", "new_id")
     if broadcast_new:
         probe = F.broadcast(probe)
     joined = (all_bands.join(probe, on=["band_idx", "band_hash"])
@@ -598,7 +581,6 @@ def cluster_representatives(df: DataFrame, id_col: str,
     candidate generation (as `lsh_candidate_pairs` does) long before.
 
     Returns (id, component, cluster_size, rep_id, keep)."""
-    from pyspark.sql.window import Window
     if quality is None:
         q = F.lit(0.0)
     elif isinstance(quality, str):
@@ -757,25 +739,7 @@ def line_dedup(df: DataFrame, text_col: str, id_col: str,
     """
     if min_count < 2:
         raise ValueError("min_count < 2 would delete unique lines")
-    if hash_mode == "md5":
-        def hf(c):
-            return F.md5(c)          # full 128-bit digest, not a slice
-    elif hash_mode == "xxhash64":
-        def hf(c):
-            return F.struct(F.xxhash64(c, F.lit(0)).alias("h0"),
-                            F.xxhash64(c, F.lit(1)).alias("h1"))
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    parts = F.split(F.col(text_col), "\n")
-    # FULL whitespace semantics ('\s'), not F.trim's ASCII-space-only: a
-    # CRLF corpus turns every blank line into '\r', which would both
-    # become the hottest key in the corpus AND get deleted everywhere but
-    # one global first occurrence — destroying paragraph structure
-    norm = F.regexp_replace(F.col("line"), r"^\s+|\s+$", "")
-    lines = (df.select(F.col(id_col).alias("_ld_id"),
-                       F.posexplode(parts).alias("pos", "line"))
-               .where(norm != "")
-               .select("_ld_id", "pos", hf(norm).alias("k")))
+    lines = _line_occurrences(df, text_col, id_col, hash_mode)
     winners = (lines.groupBy("k")
                .agg(F.min(F.struct("_ld_id", "pos")).alias("w"),
                     F.count(F.lit(1)).alias("cnt"))
@@ -853,11 +817,28 @@ def _line_key_fn(hash_mode: str):
     """128-bit line key family (the line_dedup policy: destructive ops
     never key on fewer bits)."""
     if hash_mode == "md5":
-        return lambda c: F.md5(c)
+        return lambda c: F.md5(c)    # full 128-bit digest, not a slice
     if hash_mode == "xxhash64":
         return lambda c: F.struct(F.xxhash64(c, F.lit(0)).alias("h0"),
                                   F.xxhash64(c, F.lit(1)).alias("h1"))
     raise ValueError(f"unknown hash_mode {hash_mode!r}")
+
+
+def _line_occurrences(df: DataFrame, text_col: str, id_col: str,
+                      hash_mode: str) -> DataFrame:
+    """``(_ld_id, pos, k)``: every line whose trimmed form is non-empty,
+    with its position in the document and its 128-bit key."""
+    hf = _line_key_fn(hash_mode)
+    parts = F.split(F.col(text_col), "\n")
+    # FULL whitespace semantics ('\s'), not F.trim's ASCII-space-only: a
+    # CRLF corpus turns every blank line into '\r', which would both
+    # become the hottest key in the corpus AND get deleted everywhere but
+    # one global first occurrence — destroying paragraph structure
+    norm = F.regexp_replace(F.col("line"), r"^\s+|\s+$", "")
+    return (df.select(F.col(id_col).alias("_ld_id"),
+                      F.posexplode(parts).alias("pos", "line"))
+            .where(norm != "")
+            .select("_ld_id", "pos", hf(norm).alias("k")))
 
 
 def line_keys(df: DataFrame, text_col: str,
@@ -898,13 +879,7 @@ def incremental_line_dedup(batch: DataFrame, index_keys: DataFrame,
     by appending ``line_keys(result, "clean_text")``."""
     if min_count < 2:
         raise ValueError("min_count < 2 would delete unique lines")
-    hf = _line_key_fn(hash_mode)
-    parts = F.split(F.col(text_col), "\n")
-    norm = F.regexp_replace(F.col("line"), r"^\s+|\s+$", "")
-    lines = (batch.select(F.col(id_col).alias("_ld_id"),
-                          F.posexplode(parts).alias("pos", "line"))
-             .where(norm != "")
-             .select("_ld_id", "pos", hf(norm).alias("k")))
+    lines = _line_occurrences(batch, text_col, id_col, hash_mode)
     j = lines.join(index_keys.select("k").distinct()
                    .withColumn("_ix", F.lit(True)), "k", "left")
     # one pass per key: the batch-local winner is elected only among
@@ -1033,9 +1008,7 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
     if hash_mode == "gram":
         key = lambda g: g  # noqa: E731 - oracle-replayable identity key
     elif hash_mode == "xxhash64":
-        key = lambda g: F.struct(  # noqa: E731
-            F.xxhash64(g, F.lit(0)).alias("h0"),
-            F.xxhash64(g, F.lit(1)).alias("h1"))
+        key = _line_key_fn(hash_mode)
     else:
         # no other family: a single 32/64-bit slice (md5 mode et al.)
         # would key a DATA-DESTROYING dedup on too few bits — birthday
@@ -1132,13 +1105,18 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
     whichever was crawled first, not whichever is most complete.
 
     One shuffle on the fingerprint; the election is a
-    ``min(struct(score_null_flag, -score, id))`` inside the aggregate
-    (map-side partial) — max score wins, NULL scores lose to scored
-    rows, ties keep the smallest id — then a left-semi join back on
-    (fingerprint, id), no window over text-carrying rows.  The id rides
-    the election struct UNTRANSFORMED, so any orderable id type works
-    (a string id under the previous ``-id`` negation cast to NULL and
-    silently emptied the result — ADVICE r5).  ``score`` must be
+    ``min(struct(score_null_flag, reversed_score, id))`` inside the
+    aggregate (map-side partial) — max score wins, NULL scores lose to
+    scored rows, ties keep the smallest id — then a left-semi join back
+    on (fingerprint, id), no window over text-carrying rows.  The score
+    is reversed with ``bitwise_not`` (``-x - 1``) for integral types:
+    ``-x`` overflows on the type's minimum (``-2^63`` for a long), which
+    ANSI mode rejects.  Fractional and decimal scores are negated (their
+    ranges are symmetric).  A NaN score loses to every number but beats
+    NULL: ``{NaN, 0.5}`` keeps 0.5, ``{NaN, NULL}`` keeps NaN.  The id
+    rides the election struct UNTRANSFORMED, so any orderable id type
+    works (a string id under the previous ``-id`` negation cast to NULL
+    and silently emptied the result — ADVICE r5).  ``score`` must be
     numeric.  Returns the surviving rows plus ``dup_count``.
     """
     from ..functions.text import fingerprint_expr
@@ -1148,10 +1126,12 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
         F.col(text_col).alias("_text"),
         score.alias("_score"),
         fingerprint_expr(text_col).alias("_fp"))
+    integral = isinstance(keyed.schema["_score"].dataType, IntegralType)
     best = (keyed.groupBy("_fp")
             .agg(F.min(F.struct(
                 F.col("_score").isNull().cast("int").alias("nf"),
-                F.coalesce(-F.col("_score"), F.lit(0)).alias("ns"),
+                F.coalesce(F.bitwise_not("_score") if integral
+                           else -F.col("_score"), F.lit(0)).alias("ns"),
                 F.col("id").alias("id"))).alias("_b"),
                  F.count(F.lit(1)).alias("dup_count"))
             .select("_fp", F.col("_b.id").alias("id"), "dup_count"))

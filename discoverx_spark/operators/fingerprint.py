@@ -104,40 +104,35 @@ def winnow_fingerprints(
                               F.lit("winnow md5 mode: document exceeds "
                                     "2^21 grams; use hash_mode='xxhash64'")
                               ).cast("long")))
-        w = (Window.partitionBy("id").orderBy("pos")
-             .rowsBetween(Window.currentRow, window - 1))
-        sel = occs.select(
-            "id", "_n", "pos", F.min(key).over(w).alias("_sel"))
-        # complete windows only; a document shorter than one window
-        # keeps its position-0 truncated window, so every document with
-        # >= 1 gram selects >= 1 fingerprint
-        full = sel.filter((F.col("pos") <= F.col("_n") - window)
-                          | ((F.col("_n") < window) & (F.col("pos") == 0)))
-        if not positions:
-            return (full.select(
-                "id", F.shiftright(F.col("_sel"), _POS_BITS)
-                .alias("fp_hash")).distinct())
-        return (full.select(
-            "id",
-            (F.lit(_POS_CAP) - (F.col("_sel") % (1 << _POS_BITS)))
-            .cast("int").alias("fp_pos"),
-            F.shiftright(F.col("_sel"), _POS_BITS).alias("fp_hash"))
-            .distinct())
-    # xxhash64: signed 64-bit — struct key, same ordering semantics
-    skey = F.struct(F.col("_h").alias("h"), (-F.col("pos")).alias("np"))
+        fp_hash = F.shiftright(F.col("_sel"), _POS_BITS)
+        fp_pos = F.lit(_POS_CAP) - (F.col("_sel") % (1 << _POS_BITS))
+    else:
+        # xxhash64: signed 64-bit — struct key, same ordering semantics
+        key = F.struct(F.col("_h").alias("h"), (-F.col("pos")).alias("np"))
+        fp_hash = F.col("_sel.h")
+        fp_pos = -F.col("_sel.np")
     w = (Window.partitionBy("id").orderBy("pos")
          .rowsBetween(Window.currentRow, window - 1))
-    sel = occs.select("id", "_n", "pos", F.min(skey).over(w).alias("_sel"))
+    sel = occs.select("id", "_n", "pos", F.min(key).over(w).alias("_sel"))
+    # complete windows only; a document shorter than one window
+    # keeps its position-0 truncated window, so every document with
+    # >= 1 gram selects >= 1 fingerprint
     full = sel.filter((F.col("pos") <= F.col("_n") - window)
                       | ((F.col("_n") < window) & (F.col("pos") == 0)))
     if not positions:
-        return (full.select("id", F.col("_sel.h").alias("fp_hash"))
-                .distinct())
-    return (full.select(
-        "id",
-        (-F.col("_sel.np")).cast("int").alias("fp_pos"),
-        F.col("_sel.h").alias("fp_hash"))
-        .distinct())
+        return full.select("id", fp_hash.alias("fp_hash")).distinct()
+    return (full.select("id", fp_pos.cast("int").alias("fp_pos"),
+                        fp_hash.alias("fp_hash"))
+            .distinct())
+
+
+def _shared_counts(pairs: DataFrame, id_a: str, id_b: str,
+                   min_shared: int) -> DataFrame:
+    """``(id_a, id_b, shared_fps)``: how many fingerprint-hash matches
+    each pair has, kept when at least ``min_shared``."""
+    return (pairs.groupBy(id_a, id_b)
+            .agg(F.count(F.lit(1)).alias("shared_fps"))
+            .filter(F.col("shared_fps") >= min_shared))
 
 
 def fingerprint_overlap_pairs(
@@ -172,12 +167,9 @@ def fingerprint_overlap_pairs(
     kept = _cap_hot_hashes(fps, max_hash_freq).localCheckpoint(eager=False)
     a = kept.select(F.col("fp_hash"), F.col("id").alias("id_a"))
     b = kept.select(F.col("fp_hash"), F.col("id").alias("id_b"))
-    pairs = (a.join(b, "fp_hash")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).alias("shared_fps"))
-             .filter(F.col("shared_fps") >= min_shared))
-    return pairs
+    return _shared_counts(a.join(b, "fp_hash")
+                          .filter(F.col("id_a") < F.col("id_b")),
+                          "id_a", "id_b", min_shared)
 
 
 def incremental_fingerprint_overlap(
@@ -209,7 +201,5 @@ def incremental_fingerprint_overlap(
     i = _cap_hot_hashes(index_fps.select("id", "fp_hash").distinct(),
                         max_hash_freq) \
         .select("fp_hash", F.col("id").alias("index_id"))
-    return (b.join(i, "fp_hash")
-            .groupBy("batch_id", "index_id")
-            .agg(F.count(F.lit(1)).alias("shared_fps"))
-            .filter(F.col("shared_fps") >= min_shared))
+    return _shared_counts(b.join(i, "fp_hash"), "batch_id", "index_id",
+                          min_shared)

@@ -18,6 +18,7 @@ from typing import Optional, Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def dot_expr(a, b) -> Column:
@@ -36,6 +37,16 @@ def cosine_expr(a, b) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, neighbor_id, cosine)`` rows:
+    highest cosine first, ties broken on neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "cosine", "rank"))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      round_digits: int = 6) -> DataFrame:
@@ -44,8 +55,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     Returns (query_id, neighbor_id, cosine) — the query itself excluded.
     Scores are rounded before ranking so ordering is precision-stable, and
     ties break on neighbor id (deterministic output)."""
-    from pyspark.sql.window import Window
-
     # norms are hoisted BELOW the join (one fold per input row, not one
     # per (query, corpus) pair — guide §1.2 per-task work): cosine keeps
     # the exact dot/(norm_q*norm_c) operand order, so the doubles are
@@ -62,11 +71,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                       F.round(dot_expr(F.col("q_vec"), F.col("c_vec"))
                               / (F.col("_nq") * F.col("_nc")),
                               round_digits).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top_k(scored, k)
 
 
 def embedding_near_duplicates(df: DataFrame, threshold: float = 0.98,
@@ -114,8 +119,6 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     Trades recall for a ~2^n_planes reduction in scored pairs; shuffle key
     is the bucket id, never the vectors of unrelated buckets."""
-    from pyspark.sql.window import Window
-
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_planes, seed)
@@ -135,10 +138,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .select("query_id", "neighbor_id",
                       F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6)
                       .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top_k(scored, k)
 
 
 def ivf_topk(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
@@ -148,8 +148,6 @@ def ivf_topk(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
     query's ``probes`` nearest centroids.  At scale the corpus is written
     partitioned by ``centroid_id`` so the probe join prunes partitions;
     here the assignment joins inline."""
-    from pyspark.sql.window import Window
-
     assign = ivf_assign(corpus, centroids, id_col, vec_col) \
         .withColumnRenamed("id", "neighbor_id")
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
@@ -173,11 +171,7 @@ def ivf_topk(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
               .select("query_id", "neighbor_id",
                       F.round(cosine_expr(F.col("q_vec"), F.col("c_vec")), 6)
                       .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top_k(scored, k)
 
 
 def lsh_near_duplicates(df: DataFrame, threshold: float = 0.95,
@@ -207,6 +201,19 @@ def lsh_near_duplicates(df: DataFrame, threshold: float = 0.95,
                             .filter(F.col("cosine") >= threshold)))
 
 
+def _nearest_centroid(points: DataFrame, cent: DataFrame) -> DataFrame:
+    """``points`` ``(id, v)`` rows, each with the ``centroid_id`` of its
+    most cosine-similar ``cent`` ``(centroid_id, cent_vec)`` row (ties:
+    smallest centroid id).  The centroids broadcast, so the points are
+    never shuffled by vector."""
+    scored = (points.crossJoin(F.broadcast(cent))
+              .select("id", "v", "centroid_id",
+                      cosine_expr(F.col("v"), F.col("cent_vec")).alias("sim")))
+    w = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("centroid_id"))
+    return (scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1).select("id", "v", "centroid_id"))
+
+
 def ivf_train(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 5,
               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Train IVF coarse centroids with distributed Lloyd iterations.
@@ -224,8 +231,6 @@ def ivf_train(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 5,
     re-partitioned.
 
     Returns (centroid_id, centroid: array<double>)."""
-    from pyspark.sql.window import Window
-
     c = corpus.select(F.col(id_col).alias("id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
     centroids = (c.orderBy("id").limit(n_centroids)
@@ -234,12 +239,7 @@ def ivf_train(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 5,
     for _ in range(n_iter):
         cent = centroids.select("centroid_id",
                                 F.col("centroid").alias("cent_vec"))
-        scored = (c.crossJoin(F.broadcast(cent))
-                  .select("id", "v", "centroid_id",
-                          cosine_expr(F.col("v"), F.col("cent_vec")).alias("sim")))
-        w = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-        assigned = (scored.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") == 1).select("centroid_id", "v"))
+        assigned = _nearest_centroid(c, cent).select("centroid_id", "v")
         sums = (assigned
                 .select("centroid_id", F.posexplode("v").alias("dim_idx", "x"))
                 .groupBy("centroid_id", "dim_idx")
@@ -258,17 +258,11 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame,
     """Assign each vector to its nearest centroid (broadcast centroids).
     Output: (id, centroid_id) — the IVF index's coarse partitioning; write
     it out partitioned by centroid_id and queries prune to probed lists."""
-    from pyspark.sql.window import Window
-
     cent = centroids.select(F.col(id_col).alias("centroid_id"),
                             F.col(vec_col).alias("cent_vec"))
-    scored = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")) \
-        .crossJoin(F.broadcast(cent)) \
-        .select("id", "centroid_id",
-                cosine_expr(F.col("v"), F.col("cent_vec")).alias("sim"))
-    w = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).select("id", "centroid_id"))
+    points = corpus.select(F.col(id_col).alias("id"),
+                           F.col(vec_col).alias("v"))
+    return _nearest_centroid(points, cent).select("id", "centroid_id")
 
 
 def semantic_dedup(corpus: DataFrame, centroids: DataFrame,
@@ -301,8 +295,6 @@ def semantic_dedup(corpus: DataFrame, centroids: DataFrame,
     (:func:`ivf_assign_batched`, ~100× less assignment CPU at
     equal semantics, equality pytest-asserted).
     """
-    from pyspark.sql.window import Window
-
     from .dedup import _bucket_pairs
 
     if assign_method == "batched":
@@ -506,8 +498,6 @@ def pq_train(corpus: DataFrame, m: int = 4, k: int = 16, n_iter: int = 5,
     The corpus is re-read per iteration but never re-partitioned.
 
     Returns (subspace, code, centroid: array<double>)."""
-    from pyspark.sql.window import Window
-
     c = corpus.select(F.col(id_col).alias("id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
     sub = _pq_subvectors(c, m)
@@ -566,8 +556,6 @@ def pq_topk(codes_df: DataFrame, codebook: DataFrame,
     order (deterministic association), TakeOrdered the k smallest.
     Returns (id, adc_dist, rank).  The full-precision corpus is never
     touched — this is the memory-bound-ANN shape at 10^9+ vectors."""
-    from pyspark.sql.window import Window
-
     m = int(codebook.agg(F.max("subspace")).first()[0]) + 1
     subdim = len(query) // m
     q = F.array(*[F.lit(float(x)) for x in query])

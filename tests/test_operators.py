@@ -73,6 +73,28 @@ def test_lsh_candidates_contain_exact_dups(docs):
     assert (1, 2) in cands
 
 
+def test_lsh_entry_points_share_one_banding(spark):
+    """lsh_candidate_pairs, minhash_near_duplicates (threshold 0, so
+    verification keeps every candidate) and incremental_lsh_pairs against
+    an empty index must bucket each signature identically: on a null-free
+    corpus all three yield the same candidate pair set."""
+    from discoverx_spark.operators import incremental_lsh_pairs
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    extra = [(10 + i, " ".join(words[i:] + words[:i][:2])) for i in range(8)]
+    df = spark.createDataFrame(DOCS + extra, "doc_id long, text string")
+    sigs = minhash_signatures(df, "text", "doc_id", k=16)
+    banded = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(
+        sigs, bands=4, k=16, max_bucket=None).collect()}
+    verified = {(r["id_a"], r["id_b"]) for r in minhash_near_duplicates(
+        df, "text", "doc_id", k=16, bands=4, threshold=0.0,
+        max_bucket=None).select("id_a", "id_b").collect()}
+    incremental = {(r["id_a"], r["id_b"]) for r in incremental_lsh_pairs(
+        sigs.limit(0), sigs, bands=4, k=16).collect()}
+    assert {(1, 2), (1, 3), (2, 3)} <= banded
+    assert banded == verified == incremental
+
+
 def test_jaccard_pairs_exact(docs):
     got = {(r["id_a"], r["id_b"]): r["jaccard"]
            for r in jaccard_pairs(docs, "text", "doc_id", shingle_n=2).collect()}

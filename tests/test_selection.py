@@ -102,6 +102,34 @@ def test_dedup_keep_best_elects_max_score_min_id(spark):
     assert got[4] == (7, 1)
 
 
+def test_dedup_keep_best_extreme_and_nan_scores(spark):
+    """A long score of -2^63 must not overflow the election key under
+    ANSI (negating it did), and must still order correctly against its
+    neighbours and NULL; a NaN score loses to every number but beats
+    NULL."""
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    rows = [(1, "a", lo), (2, "a", None),            # scored beats NULL
+            (3, "b", lo), (4, "b", lo + 1),          # -2^63 + 1 wins
+            (5, "c", hi), (6, "c", 0), (7, "c", lo),  # max long wins
+            (8, "d", lo), (9, "d", lo)]              # tie: min id
+    df = spark.createDataFrame(rows, "doc_id long, text string, q long")
+    got = {r["id"]: r["score"]
+           for r in dedup_keep_best(df, "text", "doc_id",
+                                    F.col("q")).collect()}
+    assert got == {1: lo, 4: lo + 1, 5: hi, 8: lo}
+
+    nan = float("nan")
+    rows = [(1, "a", nan), (2, "a", 0.5),             # a number beats NaN
+            (3, "b", nan), (4, "b", None),            # NaN beats NULL
+            (5, "c", float("-inf")), (6, "c", nan)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, q double")
+    got = {r["id"]: r["score"]
+           for r in dedup_keep_best(df, "text", "doc_id",
+                                    F.col("q")).collect()}
+    assert set(got) == {2, 3, 5}
+    assert got[2] == 0.5 and math.isnan(got[3]) and got[5] == float("-inf")
+
+
 def test_doremi_absent_domain_keeps_prior_mass(spark):
     df = spark.createDataFrame([("a", 8.0), ("b", 5.0)],
                                "dom string, loss double")
