@@ -14,13 +14,43 @@ are isolated per table and reported.
 
 from __future__ import annotations
 
+import re
+import warnings
 from dataclasses import dataclass, replace
-from typing import Callable, List, Optional
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .scanner import TableRegistry, string_columns
+from .scanner import TableRegistry, _union_all, string_columns
+
+
+def _run_sql_units(spark: SparkSession, registry: TableRegistry,
+                   units: Sequence[Tuple[str, Callable[[DataFrame], str]]],
+                   ) -> Tuple[List[Tuple[str, DataFrame]], List[str]]:
+    """Run one SQL statement per ``(full_name, sql_of)`` unit against the
+    registered table: the table becomes a temp view, ``sql_of(table)``
+    gives the statement, and its FROM/JOIN references to ``full_name``
+    are pointed at the view.  Returns ``([(full_name, df)], failures)``."""
+    done, failures = [], []
+    for name, sql_of in units:
+        view = "dxs_" + name.replace(".", "_").replace("-", "_")
+        try:
+            # registry.get INSIDE the isolation block: a stale classified
+            # table (persisted scan state referencing a table no longer
+            # registered) must fail its own unit, not abort every healthy
+            # one.  ONCE per unit: register_parquet suppliers re-read the
+            # schema on every get
+            src = registry.get(name)
+            src.createOrReplaceTempView(view)
+            # rewrite only FROM/JOIN positions — a whole-statement replace
+            # would corrupt provenance literals like '{full_table_name}'
+            sql = re.sub(r"(?i)\b(FROM|JOIN)\s+" + re.escape(name) + r"\b",
+                         rf"\1 {view}", sql_of(src))
+            done.append((name, spark.sql(sql)))
+        except Exception as e:  # per-unit isolation (explorer.py:287-290)
+            failures.append(f"{name}: {e}")
+    return done, failures
 
 
 def _template_vars(full_name: str, df: DataFrame) -> dict:
@@ -157,41 +187,25 @@ class DataExplorer:
         """Execute the template per table, add provenance columns, union."""
         if self._sql_template is None:
             raise ValueError("call with_sql(template) first")
-        import re as _re
-        import warnings as _warnings
-
-        out: Optional[DataFrame] = None
-        failures: List[str] = []
-        for name in self.table_names():
-            cat, sch, tbl = name.split(".")
-            view = f"dxs_exp_{cat}_{sch}_{tbl}".replace("-", "_")
-            try:
-                # fetch ONCE per table (register_parquet suppliers re-read
-                # schema per get); rewrite only FROM/JOIN positions — a
-                # whole-statement replace would corrupt provenance
-                # literals like '{full_table_name}' in the select list
-                src = self.registry.get(name)
-                src.createOrReplaceTempView(view)
-                sql = _re.sub(r"(?i)\b(FROM|JOIN)\s+" + _re.escape(name)
-                              + r"\b", rf"\1 {view}",
-                              self._sql_for(name, src))
-                df = self.spark.sql(sql)
-            except Exception as e:  # per-table isolation (explorer.py:287-290)
-                failures.append(f"{name}: {e}")
-                continue
-            df = (df.withColumn("table_catalog", F.lit(cat))
-                    .withColumn("table_schema", F.lit(sch))
-                    .withColumn("table_name", F.lit(tbl)))
-            out = df if out is None else out.unionByName(df)
-        if out is None:
+        frames, failures = _run_sql_units(
+            self.spark, self.registry,
+            [(n, lambda src, n=n: self._sql_for(n, src))
+             for n in self.table_names()])
+        if not frames:
             raise ValueError(
                 f"no tables matched {self.from_tables!r} (or every unit "
                 f"failed). Failures: " + ("; ".join(failures) or "none"))
         if failures:
-            _warnings.warn(
+            warnings.warn(
                 f"explorer.apply: {len(failures)} unit(s) failed and were "
                 f"skipped: " + "; ".join(failures), stacklevel=2)
-        return out
+        parts = []
+        for name, df in frames:
+            cat, sch, tbl = name.split(".")
+            parts.append(df.withColumn("table_catalog", F.lit(cat))
+                         .withColumn("table_schema", F.lit(sch))
+                         .withColumn("table_name", F.lit(tbl)))
+        return _union_all(parts)
 
     def map(self, f: Callable[[str, DataFrame], object]) -> List[object]:
         """Python fan-out over matched tables (explorer.py:187-217) —

@@ -1,6 +1,6 @@
 from .keywords import (build_automaton, count_matches,
                        make_keyword_match_udf)
-from .text import (token_count_expr, bpe_token_estimate_expr, char_len_expr,
+from .text import (token_count_expr, bpe_token_estimate_expr,
                    alpha_ratio_expr, digit_ratio_expr, punct_ratio_expr,
                    whitespace_only_expr, fingerprint_expr, normalize_text_expr,
                    langid_struct_expr, make_langid_udf, toxicity_exprs,
@@ -19,7 +19,7 @@ __all__ = [
     "save_char_lm", "load_char_lm", "save_term_weights",
     "load_term_weights", "save_stopwords", "load_stopwords",
     "broadcast_model",
-    "token_count_expr", "bpe_token_estimate_expr", "char_len_expr",
+    "token_count_expr", "bpe_token_estimate_expr",
     "alpha_ratio_expr", "digit_ratio_expr", "punct_ratio_expr",
     "whitespace_only_expr", "fingerprint_expr", "normalize_text_expr",
     "langid_struct_expr", "make_langid_udf", "toxicity_exprs",

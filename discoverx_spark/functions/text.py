@@ -44,10 +44,6 @@ def bpe_token_estimate_expr(col) -> Column:
 # Quality ratios
 # --------------------------------------------------------------------------
 
-def char_len_expr(col) -> Column:
-    return F.length(_c(col))
-
-
 def _count_class(col, char_class: str) -> Column:
     return F.size(F.regexp_extract_all(_c(col), F.lit(f"({char_class})"), 1))
 

@@ -20,15 +20,18 @@ returning both the surviving DataFrame and the matched-row count.
 from __future__ import annotations
 
 import itertools
+import operator
 import re
 from dataclasses import dataclass
-from fnmatch import fnmatch
+from functools import reduce
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .scanner import ScanResult, TableRegistry, qcol
+from .explorer import _run_sql_units
+from .scanner import (ScanResult, TableRegistry, _columns_by_table,
+                      _union_all, qcol)
 
 _CLASS_RX = re.compile(r"\[([\w_-]+)\]")
 _FROM_RX = re.compile(
@@ -74,35 +77,23 @@ class Msql:
         ``classified_columns``: (catalog, schema, table, column, class)
         tuples, e.g. ``ScanResult.get_classes(min_score)``.
         """
-        pat_parts = self.from_pattern.split(".")
-        by_table: Dict[Tuple[str, str, str], Dict[str, List[str]]] = {}
-        for cat, sch, tbl, col, klass in classified_columns:
-            if klass not in self.classes:
-                continue
-            if not all(fnmatch(p, pp) for p, pp in
-                       zip((cat, sch, tbl), pat_parts)):
-                continue
-            by_table.setdefault((cat, sch, tbl), {}).setdefault(klass, []).append(col)
-
+        by_table = _columns_by_table(classified_columns, self.from_pattern,
+                                     self.classes)
         rows: List[SQLRow] = []
-        for (cat, sch, tbl), cls_cols in sorted(by_table.items()):
+        for name, cls_cols in by_table.items():
             if not all(k in cls_cols for k in self.classes):
                 continue  # table lacks a referenced class → skipped (msql.py:94-100)
             combos = itertools.product(
-                *[[(k, c) for c in sorted(cls_cols[k])] for k in self.classes])
+                *[[(k, c) for c in cls_cols[k]] for k in self.classes])
             for combo in combos:
                 sql = self.msql
                 for klass, col in combo:
                     sql = sql.replace(f"[{klass}]", f"`{col}`")
-                sql = _FROM_RX.sub(f"FROM {cat}.{sch}.{tbl}", sql, count=1)
-                rows.append(SQLRow(cat, sch, tbl, sql))
+                sql = _FROM_RX.sub(f"FROM {name}", sql, count=1)
+                rows.append(SQLRow(*name.split("."), sql))
         return rows
 
     # -- execution ---------------------------------------------------------
-
-    @staticmethod
-    def _view_name(cat: str, sch: str, tbl: str) -> str:
-        return f"dxs_{cat}_{sch}_{tbl}".replace("-", "_")
 
     def execute(self, spark: SparkSession, registry: TableRegistry,
                 classified_columns, what_if: bool = False,
@@ -128,41 +119,26 @@ class Msql:
             for r in rows:
                 print(r.sql)
             return None
-        out: Optional[DataFrame] = None
-        failures = []
-        for r in rows:
-            full = f"{r.catalog}.{r.schema}.{r.table}"
-            view = self._view_name(r.catalog, r.schema, r.table)
-            sql = r.sql.replace(f"FROM {full}", f"FROM {view}")
-            try:
-                # registry.get INSIDE the isolation block: a stale
-                # classified table (persisted scan state referencing a
-                # table no longer registered) must fail its own unit,
-                # not abort every healthy one
-                registry.get(full).createOrReplaceTempView(view)
-                # provenance columns first, then the unit's own columns —
-                # the reference contract (msql.py:114-128): rows stay
-                # attributable to their source table, and the fold is a
-                # POSITIONAL union (msql.py:144) so same-class columns with
-                # different per-table names still line up.
-                df = spark.sql(sql)
-                df = df.select(
-                    F.lit(r.catalog).alias("table_catalog"),
-                    F.lit(r.schema).alias("table_schema"),
-                    F.lit(r.table).alias("table_name"),
-                    *[c for c in df.columns
-                      if c not in ("table_catalog", "table_schema",
-                                   "table_name")])
-                out = df if out is None else out.union(df)
-            except Exception as e:  # per-unit isolation (msql.py:130-134)
-                failures.append(f"{full}: {e}")
-                continue
-        if out is None:
+        frames, failures = _run_sql_units(
+            spark, registry,
+            [(f"{r.catalog}.{r.schema}.{r.table}", lambda src, sql=r.sql: sql)
+             for r in rows])
+        if not frames:
             # reference raises when no unit succeeds (msql.py:141-142)
             raise ValueError(
                 "No M-SQL units were successfully executed. "
                 + "; ".join(failures))
-        return out
+        # provenance columns first, then the unit's own columns — the
+        # reference contract (msql.py:114-128): rows stay attributable to
+        # their source table, and the fold is a POSITIONAL union
+        # (msql.py:144) so same-class columns with different per-table
+        # names still line up.
+        prov = ("table_catalog", "table_schema", "table_name")
+        return reduce(DataFrame.union, [
+            df.select(*[F.lit(v).alias(p)
+                        for p, v in zip(prov, name.split("."))],
+                      *[c for c in df.columns if c not in prov])
+            for name, df in frames])
 
 
 def select_by_classes(spark: SparkSession, registry: TableRegistry,
@@ -173,42 +149,34 @@ def select_by_classes(spark: SparkSession, registry: TableRegistry,
     ``classified: map<class, value>`` plus the full row as JSON — the
     DataFrame-native analog of the reference's nested named_struct select
     (``dx.py:311-325``)."""
-    classes = scan.get_classes(min_score)
-    if by_classes is not None:
-        classes = [c for c in classes if c[4] in by_classes]
-    by_table: Dict[str, List[Tuple[str, str]]] = {}
-    for cat, sch, tbl, col, klass in classes:
-        name = f"{cat}.{sch}.{tbl}"
-        by_table.setdefault(name, []).append((klass, col))
-    out = None
+    by_table = _columns_by_table(scan.get_classes(min_score), from_tables,
+                                 by_classes)
+    frames = []
     for name in registry.resolve(from_tables):
         if name not in by_table:
             continue
         df = registry.get(name)
-        pairs = sorted(set(by_table[name]))
         cat, sch, tbl = name.split(".")
         # two columns sharing a class would duplicate the map key (Spark
         # default mapKeyDedupPolicy=EXCEPTION crashes at runtime): keys
         # stay the bare class when unique, 'class:column' otherwise
-        from collections import Counter
-        k_counts = Counter(k for k, _ in pairs)
         entries = []
-        for k, c in pairs:
-            key = k if k_counts[k] == 1 else f"{k}:{c}"
-            entries += [F.lit(key), qcol(df, c).cast("string")]
-        sel = df.select(
+        for k, cols in by_table[name].items():
+            for c in cols:
+                key = k if len(cols) == 1 else f"{k}:{c}"
+                entries += [F.lit(key), qcol(df, c).cast("string")]
+        frames.append(df.select(
             F.lit(cat).alias("table_catalog"),
             F.lit(sch).alias("table_schema"),
             F.lit(tbl).alias("table_name"),
             F.create_map(*entries).alias("classified"),
             F.to_json(F.struct(*[qcol(df, c).alias(c) for c in df.columns]))
             .alias("row_json"),
-        )
-        out = sel if out is None else out.unionByName(sel)
-    if out is None:
+        ))
+    if not frames:
         raise ValueError(f"no classified tables match {from_tables!r} "
                          f"at min_score {min_score}")
-    return out
+    return _union_all(frames)
 
 
 def search(spark: SparkSession, registry: TableRegistry, scan: ScanResult,
@@ -230,53 +198,33 @@ def delete_by_class(spark: SparkSession, registry: TableRegistry,
     ``values`` are removed.  Returns a summary DataFrame
     ``(table, num_deleted)`` and, when confirmed, a dict of surviving
     DataFrames to rewrite — the what-if guard mirrors ``dx.py:376-388``."""
-    pat_parts = from_tables.split(".")
-    if len(pat_parts) != 3:
-        # zip() would silently truncate a malformed pattern and BROADEN
-        # the destructive scope ('main.default' matching every table in
-        # the schema) — the one path that rewrites data validates first
-        raise ValueError(
-            "from_tables must be 'catalog.schema.table' (wildcards "
-            f"allowed), got {from_tables!r}")
-    classes = [c for c in scan.get_classes(min_score) if c[4] == by_class]
+    by_table = _columns_by_table(scan.get_classes(min_score), from_tables,
+                                 [by_class])
     plans = {}
     counts = []
     cand_rows = []
-    cols_by_name: Dict[str, List[str]] = {}
-    for cat, sch, tbl, col, _k in classes:
-        name = f"{cat}.{sch}.{tbl}"
-        if not all(fnmatch(p, pp) for p, pp in
-                   zip(name.split("."), pat_parts)):
-            continue
+    for name, cls_cols in by_table.items():
         df = registry.get(name)
-        cond = qcol(df, col).isin(values)
-        # one unioned agg instead of a count() action per table: the
-        # matched-row counts come back from a single Spark job however many
-        # tables are classified
-        cand_rows.append((name, col))
-        counts.append(df.filter(cond).select(
-            F.lit(name).alias("table"), F.lit(col).alias("column")))
-        cols_by_name.setdefault(name, []).append(col)
-    if yes_i_am_sure:
-        # ONE plan per table over ALL its classified columns: a per-column
-        # plans[name] assignment would keep only the last column's filter
-        # and silently retain rows matching the earlier columns
-        for name, cols in cols_by_name.items():
-            df = registry.get(name)
-            keep = None
-            for col in cols:
-                c = qcol(df, col)
-                k = ~c.isin(values) | c.isNull()
-                keep = k if keep is None else (keep & k)
-            plans[name] = df.filter(keep)
+        for col in cls_cols[by_class]:
+            # one unioned agg instead of a count() action per table: the
+            # matched-row counts come back from a single Spark job however
+            # many tables are classified
+            cand_rows.append((name, col))
+            counts.append(df.filter(qcol(df, col).isin(values)).select(
+                F.lit(name).alias("table"), F.lit(col).alias("column")))
+        if yes_i_am_sure:
+            # ONE plan per table over ALL its classified columns: a
+            # per-column plans[name] assignment would keep only the last
+            # column's filter and silently retain rows matching the
+            # earlier columns
+            plans[name] = df.filter(reduce(operator.and_, [
+                ~qcol(df, col).isin(values) | qcol(df, col).isNull()
+                for col in cls_cols[by_class]]))
     if not counts:
         summary = spark.createDataFrame(
             [], "table string, column string, num_deleted long")
     else:
-        unioned = counts[0]
-        for c in counts[1:]:
-            unioned = unioned.unionByName(c)
-        agg = unioned.groupBy("table", "column").agg(
+        agg = _union_all(counts).groupBy("table", "column").agg(
             F.count("*").cast("long").alias("num_deleted"))
         cand = spark.createDataFrame(cand_rows, "table string, column string")
         summary = (cand.join(agg, on=["table", "column"], how="left")
@@ -297,15 +245,16 @@ def scrub_by_classes(spark: SparkSession, registry: TableRegistry,
     """Redact every classified column in-place with its class token — the
     quality-filter extension of M-SQL DELETE: instead of dropping rows,
     rewrite the PII cells.  Returns {table: rewritten DataFrame}."""
-    by_table: Dict[str, List[Tuple[str, str]]] = {}
-    for cat, sch, tbl, col, klass in scan.get_classes(min_score):
-        by_table.setdefault(f"{cat}.{sch}.{tbl}", []).append((col, klass))
+    by_table = _columns_by_table(scan.get_classes(min_score), from_tables)
     out = {}
     for name in registry.resolve(from_tables):
         if name not in by_table:
             continue
         df = registry.get(name)
-        for col, klass in sorted(set(by_table[name])):
+        # (column, class) order: a column with several classes ends up
+        # with the token of its last class
+        for col, klass in sorted((c, k) for k, cols in by_table[name].items()
+                                 for c in cols):
             df = df.withColumn(
                 col, F.when(qcol(df, col).isNotNull(),
                             F.lit(f"[REDACTED_{klass.upper()}]"))

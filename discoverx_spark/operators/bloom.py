@@ -35,6 +35,7 @@ from typing import Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -126,9 +127,11 @@ def bloom_membership_frame(df: DataFrame, key_col: str, words: np.ndarray,
     if num_bits % 64 != 0:
         raise ValueError(f"num_bits must be a multiple of 64, got {num_bits}")
     spark = df.sparkSession
-    # signed view: same 64 bits, Spark longs are signed
-    wlist = [int(x) for x in words.view(np.int64)]
-    wdf = spark.createDataFrame([(wlist,)], "_bloom_words: array<bigint>")
+    # signed view: same 64 bits, Spark longs are signed.  An Arrow table
+    # becomes a LocalRelation; a list of Python ints would go through a
+    # PythonRDD, one boxed int per word
+    wdf = spark.createDataFrame(pa.table({"_bloom_words": pa.array(
+        [words.view(np.int64)], type=pa.list_(pa.int64()))}))
     key = F.col(key_col).cast("string")
     masks = F.array(*[F.lit((1 << b) - (1 << 64 if b == 63 else 0))
                       for b in range(64)])

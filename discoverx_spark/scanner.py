@@ -27,7 +27,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from fnmatch import fnmatch
-from typing import Callable, Dict, List, Optional, Sequence, Union
+from functools import reduce
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,55 @@ def _read_parquet_if_exists(spark: SparkSession, path: str, **options):
     df = spark.read.options(**options).parquet(path)
     df.schema  # force analysis so a read failure surfaces here
     return df
+
+
+def _merge_parquet(new: DataFrame, path: str, key_cols: List[str]) -> None:
+    """MERGE-INTO upsert emulated over parquet (reference
+    scanner.py:103-119): rows of ``new`` replace stored rows with the same
+    ``key_cols``, other stored rows are kept, and a column missing on
+    either side is NULL there."""
+    old = _read_parquet_if_exists(new.sparkSession, path)
+    merged = new if old is None else old.join(
+        new.select(*key_cols), on=key_cols, how="left_anti").unionByName(
+            new, allowMissingColumns=True)
+    # localCheckpoint: the merged plan reads the files being replaced
+    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+
+
+def _union_all(frames: Iterable[DataFrame]) -> DataFrame:
+    """Left fold of ``frames`` with ``unionByName``."""
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _table_matcher(pattern: str) -> Callable[[str], bool]:
+    """Predicate on ``catalog.schema.table`` names for a pattern with Unix
+    wildcards per component (reference msql.py:165-174 + table_info
+    wildcard filters).  A pattern without exactly three parts raises:
+    zip() would silently truncate it and BROADEN the scope ('main.default'
+    matching every table in the schema)."""
+    parts = pattern.split(".")
+    if len(parts) != 3:
+        raise ValueError("table pattern must be 'catalog.schema.table' "
+                         f"(wildcards allowed), got {pattern!r}")
+    return lambda name: all(fnmatch(n, p)
+                            for n, p in zip(name.split("."), parts))
+
+
+def _columns_by_table(classified, from_tables: str,
+                      classes: Optional[Sequence[str]] = None,
+                      ) -> Dict[str, Dict[str, List[str]]]:
+    """``{full_name: {class: sorted columns}}`` of the (catalog, schema,
+    table, column, class) tuples whose table matches ``from_tables`` (and
+    whose class is in ``classes``, if given); tables and classes in sorted
+    order."""
+    matches = _table_matcher(from_tables)
+    found: Dict[str, Dict[str, set]] = {}
+    for cat, sch, tbl, col, klass in classified:
+        name = f"{cat}.{sch}.{tbl}"
+        if (classes is None or klass in classes) and matches(name):
+            found.setdefault(name, {}).setdefault(klass, set()).add(col)
+    return {name: {k: sorted(cols) for k, cols in sorted(found[name].items())}
+            for name in sorted(found)}
 
 
 SCAN_RESULT_SCHEMA = T.StructType([
@@ -165,17 +215,10 @@ class ScanResult:
         """Idempotent upsert keyed on (catalog, schema, table, column, class)
         — Delta-MERGE semantics (reference scanner.py:103-119) emulated over
         parquet: new rows replace matching keys, others are preserved."""
-        spark = self.df.sparkSession
-        new = self.df.withColumn("effective_timestamp", F.current_timestamp())
-        key = ["table_catalog", "table_schema", "table_name",
-               "column_name", "class_name"]
-        old = _read_parquet_if_exists(spark, path)
-        if old is None:
-            merged = new
-        else:
-            merged = old.join(new.select(*key), on=key,
-                              how="left_anti").unionByName(new)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        _merge_parquet(
+            self.df.withColumn("effective_timestamp", F.current_timestamp()),
+            path, ["table_catalog", "table_schema", "table_name",
+                   "column_name", "class_name"])
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "ScanResult":
@@ -266,15 +309,7 @@ class TableRegistry:
     def resolve(self, pattern: str) -> List[str]:
         """Wildcard resolution per component (reference msql.py:165-174 +
         table_info wildcard filters)."""
-        parts = pattern.split(".")
-        if len(parts) != 3:
-            raise ValueError(f"invalid table pattern {pattern!r}")
-        out = []
-        for name in sorted(self._tables):
-            nparts = name.split(".")
-            if all(fnmatch(np, pp) for np, pp in zip(nparts, parts)):
-                out.append(name)
-        return out
+        return sorted(filter(_table_matcher(pattern), self._tables))
 
     def get(self, full_name: str) -> DataFrame:
         return self._tables[full_name]()
@@ -315,7 +350,4 @@ class Scanner:
                 table_catalog=cat, table_schema=sch, table_name=tbl))
         if not parts:
             raise ValueError("no string columns found in any matched table")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return ScanResult(df=out)
+        return ScanResult(df=_union_all(parts))

@@ -27,14 +27,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, path_or_name: str,
-               fmt: str = "parquet") -> DataFrame:
-    """Read a table by path (parquet/csv/json) or catalog name."""
-    if "/" in path_or_name:
-        return spark.read.format(fmt).load(path_or_name)
-    return spark.read.table(path_or_name)
-
-
 def read_csv(spark: SparkSession, path: str, schema: str,
              header: bool = True) -> DataFrame:
     """Explicit-schema CSV (never inferSchema — deterministic types,

@@ -5,10 +5,16 @@ table of transcripts; the reference's analogs are Delta MERGE at
 ``/root/reference/discoverx/scanner.py:113-119`` and DESCRIBE
 DETAIL/HISTORY at ``delta_housekeeping.py:106-144``).  This container has
 no Iceberg/Delta jars (LIMITATIONS §2), so the default implementation is
-partitioned parquet with an emulated snapshot log — but every read /
-append / overwrite / merge / file-stats / snapshot call the engine makes
-goes through this one interface, so a real Iceberg binding is a drop-in
-second class, not a rewrite.
+partitioned parquet with an emulated snapshot log.
+
+Only ``sources.io.merge_upsert`` (merge) and code that picks a format
+with ``get_format`` go through this facade.  The rest of the engine reads
+and writes parquet directly: ``ScanResult.save``/``load`` (``save`` runs
+the same MERGE body, ``scanner._merge_parquet``, but records no
+snapshot), the lineage and metrics appends of ``lineage.ResumableRunner``,
+``lineage.write_bucketed``, ``pipeline.write_decisions`` and
+``sources.io.write_partitioned``.  A real Iceberg binding is a second
+class here plus moving those calls onto it.
 
 Snapshot emulation: each mutating operation appends one row to a
 ``<location>._snapshots`` parquet log kept BESIDE the table directory
@@ -129,18 +135,9 @@ class ParquetTableFormat(TableFormat):
 
     def merge(self, spark: SparkSession, new: DataFrame, location: str,
               key_cols: List[str]) -> None:
-        from ..scanner import _read_parquet_if_exists
+        from ..scanner import _merge_parquet
 
-        old = _read_parquet_if_exists(spark, location)
-        if old is None:
-            merged = new
-        else:
-            merged = old.join(new.select(*key_cols), on=key_cols,
-                              how="left_anti").unionByName(
-                                  new, allowMissingColumns=True)
-        # localCheckpoint: the merged plan reads the files being replaced
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            location)
+        _merge_parquet(new, location, key_cols)
         self._record(spark, location, "merge")
 
     def file_stats(self, spark: SparkSession, location: str,

@@ -90,3 +90,18 @@ def test_jvm_membership_frame_equals_udf_twin(spark):
                                  m, k, flag_col="jvm")
           .filter(~F.col("jvm")).count())
     assert fn == 0
+
+
+def test_membership_frame_words_ride_a_local_relation(spark):
+    """The word array reaches the JVM as an Arrow-built LocalRelation, not
+    as a PythonRDD of boxed ints (a LogicalRDD in the plan)."""
+    from discoverx_spark.operators.bloom import bloom_membership_frame
+
+    keys = spark.range(300).selectExpr("cast(id AS string) AS k")
+    m, k = bloom_params(300, 0.01)
+    words = bloom_build(keys.filter("k < '2'"), "k", m, k)
+    out = bloom_membership_frame(keys, "k", words, m, k)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan and "LocalRelation" in plan
+    hits = {r["k"] for r in out.filter("_maybe").collect()}
+    assert {str(i) for i in range(300) if str(i) < "2"} <= hits

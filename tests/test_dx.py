@@ -259,7 +259,45 @@ def test_duplicate_class_columns_select_and_delete(spark):
     assert [r["id"] for r in surviving] == [3]
 
 
-def test_delete_by_class_rejects_malformed_pattern(dx):
+@pytest.mark.parametrize("call", [
+    lambda d: d.delete_by_class("main.default", "email", ["a@b.org"],
+                                yes_i_am_sure=True),
+    lambda d: d.select_by_classes("main.default"),
+    lambda d: d.scrub_by_classes("main.default"),
+    lambda d: d.from_tables("main.default").table_names(),
+], ids=["delete_by_class", "select_by_classes", "scrub_by_classes",
+        "from_tables"])
+def test_delete_by_class_rejects_malformed_pattern(dx, call):
+    # every path that resolves a table pattern shares one check: a
+    # two-part pattern must not silently match a whole schema
     with pytest.raises(ValueError, match="catalog.schema.table"):
-        dx.delete_by_class("main.default", "email", ["a@b.org"],
-                           yes_i_am_sure=True)
+        call(dx)
+
+
+# ---------------------------------------------------------------------------
+# Shared SQL-unit runner: per-unit isolation and FROM/JOIN rewriting
+# ---------------------------------------------------------------------------
+
+def test_msql_isolates_unregistered_table(dx):
+    classified = dx.scan_result.get_classes(0.95) + [
+        ("main", "gone", "t", "email", "email")]
+    df = Msql("SELECT [email] AS e FROM main.*.*").execute(
+        dx.spark, dx.registry, classified)
+    assert sorted(r["e"] for r in df.collect()) == ["a@b.org", "x@y.museum"]
+    assert {r["table_name"] for r in df.collect()} == {"tb_2"}
+
+
+def test_explorer_isolates_failing_unit(dx):
+    ex = (dx.from_tables("main.default.*")
+          .with_sql("SELECT id, email FROM {full_table_name}"))
+    with pytest.warns(UserWarning, match=r"1 unit\(s\) failed"):
+        out = ex.apply()
+    rows = sorted((r["table_name"], r["id"]) for r in out.collect())
+    assert rows == [("tb_2", 1), ("tb_2", 2)]
+
+
+def test_msql_self_join(dx):
+    df = dx.msql("SELECT a.[email] AS e, b.id FROM main.default.tb_2 a "
+                 "JOIN main.default.tb_2 b ON a.id = b.id")
+    assert sorted((r["e"], r["id"]) for r in df.collect()) == \
+        [("a@b.org", 1), ("x@y.museum", 2)]
